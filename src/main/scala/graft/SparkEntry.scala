@@ -1027,7 +1027,7 @@ object SparkEntry {
       // the in-repo reference decoder): shingle J >= 0.8 OR shingle
       // containment >= 0.9 (is_sub only fires when containment already
       // passed, so it never widens the predicate) OR audio frame-set
-      // J >= 0.35 (empty-vs-empty scores 1.0, matching array_jaccard).
+      // J >= 0.35 (empty-vs-empty scores 0.0, matching array_jaccard).
       // Clusters: transitive closure -> min clip_id; singletons self-map.
       """WITH RECURSIVE c AS (
         |  SELECT clip_id FROM read_parquet('{OUT}/clips_input.parquet')
@@ -1047,7 +1047,7 @@ object SparkEntry {
         |  SELECT a, b FROM scored
         |  WHERE CAST(ish AS DOUBLE) / nullif(nsa + nsb - ish, 0) >= 0.8
         |     OR CAST(ish AS DOUBLE) / nullif(least(nsa, nsb), 0) >= 0.9
-        |     OR (CASE WHEN naa + nab - iaf = 0 THEN 1.0
+        |     OR (CASE WHEN naa + nab - iaf = 0 THEN 0.0
         |          ELSE CAST(iaf AS DOUBLE) / (naa + nab - iaf) END) >= 0.35
         |), e AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b, a FROM pairs),
         |reach AS (

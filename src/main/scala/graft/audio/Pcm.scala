@@ -1,6 +1,6 @@
 package graft.audio
 
-import graft.sketch.Murmur3x64
+import graft.sketch.{MinHasher, Murmur3x64}
 
 /** Audio handling for the clips table (`bytes BINARY` + typed metadata).
   *
@@ -93,52 +93,51 @@ object Pcm {
   // coin flips; the above-median mask keeps them robustly 0.)
   final val FrameSize = 256
   final val HopSize = 128
-  final val NBands = 25 // 24 fingerprint bits per frame
+  final val NBands = 25 // 24 fingerprint bits per frame; a multiple of 5 (goertzel5)
 
-  /** Per-frame 16-bit fingerprints over the whole clip. */
+  /** Per-frame 24-bit fingerprints over the whole clip: bit b of a frame is
+    * set when band b's Goertzel energy exceeds the frame's median band
+    * energy (band NBands - 1 only takes part in the median).
+    *
+    * Kernel shape: the 25 coefficients are computed once per clip; each
+    * pass over a frame's 256 samples advances five independent band
+    * recurrences (five passes per frame), so the floating-point dependency
+    * chains overlap instead of running one band at a time. Every band still
+    * performs exactly the plain Goertzel operations in the plain order (no
+    * fused multiply-add, no reassociation), so the output is bit-identical
+    * to a one-band-at-a-time loop; AudioFingerprintSpec pins that. */
   def fingerprintFrames(samples: Array[Double], srHz: Int): Array[Int] = {
+    require(srHz > 0, s"sr_hz must be positive, got $srHz")
     if (samples.length < FrameSize) return Array.empty
     val nFrames = (samples.length - FrameSize) / HopSize + 1
-    val energies = Array.ofDim[Double](nFrames, NBands)
     // Goertzel at NBands log-spaced frequencies in [200 Hz, 0.45*sr]
-    val freqs = new Array[Double](NBands)
+    val coeffs = new Array[Double](NBands)
     val fLo = 200.0
     val fHi = 0.45 * srHz
     var b = 0
     while (b < NBands) {
-      freqs(b) = fLo * math.pow(fHi / fLo, b.toDouble / (NBands - 1))
+      val freq = fLo * math.pow(fHi / fLo, b.toDouble / (NBands - 1))
+      coeffs(b) = 2.0 * math.cos(2.0 * math.Pi * freq / srHz)
       b += 1
     }
+    val energies = new Array[Double](NBands)
+    val sorted = new Array[Double](NBands)
+    val out = new Array[Int](nFrames)
     var f = 0
     while (f < nFrames) {
       val off = f * HopSize
       b = 0
       while (b < NBands) {
-        val w = 2.0 * math.Pi * freqs(b) / srHz
-        val coeff = 2.0 * math.cos(w)
-        var s0 = 0.0; var s1 = 0.0; var s2 = 0.0
-        var i = 0
-        while (i < FrameSize) {
-          s0 = samples(off + i) + coeff * s1 - s2
-          s2 = s1; s1 = s0
-          i += 1
-        }
-        energies(f)(b) = s1 * s1 + s2 * s2 - coeff * s1 * s2
-        b += 1
+        goertzel5(samples, off, coeffs, b, energies)
+        b += 5
       }
-      f += 1
-    }
-    val out = new Array[Int](nFrames)
-    val sorted = new Array[Double](NBands)
-    f = 0
-    while (f < nFrames) {
-      System.arraycopy(energies(f), 0, sorted, 0, NBands)
+      System.arraycopy(energies, 0, sorted, 0, NBands)
       java.util.Arrays.sort(sorted)
       val median = sorted(NBands / 2)
       var bits = 0
       b = 0
       while (b < NBands - 1) {
-        if (energies(f)(b) > median) bits |= (1 << b)
+        if (energies(b) > median) bits |= (1 << b)
         b += 1
       }
       out(f) = bits
@@ -147,24 +146,47 @@ object Pcm {
     out
   }
 
-  /** Positional frame-hash set for MinHash: hash(frameIndexBucket, bits).
-    * Coarse position buckets keep alignment sensitivity low. */
+  /** Energies of bands b0..b0+4 over one frame: five Goertzel recurrences
+    * `s0 = x + c*s1 - s2` advanced together, held in locals. */
+  private def goertzel5(x: Array[Double], off: Int, coeffs: Array[Double], b0: Int,
+      energies: Array[Double]): Unit = {
+    val c0 = coeffs(b0); val c1 = coeffs(b0 + 1); val c2 = coeffs(b0 + 2)
+    val c3 = coeffs(b0 + 3); val c4 = coeffs(b0 + 4)
+    var p0 = 0.0; var p1 = 0.0; var p2 = 0.0; var p3 = 0.0; var p4 = 0.0 // s1
+    var q0 = 0.0; var q1 = 0.0; var q2 = 0.0; var q3 = 0.0; var q4 = 0.0 // s2
+    var i = off
+    val end = off + FrameSize
+    while (i < end) {
+      val v = x(i)
+      val n0 = v + c0 * p0 - q0
+      val n1 = v + c1 * p1 - q1
+      val n2 = v + c2 * p2 - q2
+      val n3 = v + c3 * p3 - q3
+      val n4 = v + c4 * p4 - q4
+      q0 = p0; q1 = p1; q2 = p2; q3 = p3; q4 = p4
+      p0 = n0; p1 = n1; p2 = n2; p3 = n3; p4 = n4
+      i += 1
+    }
+    energies(b0) = p0 * p0 + q0 * q0 - c0 * p0 * q0
+    energies(b0 + 1) = p1 * p1 + q1 * q1 - c1 * p1 * q1
+    energies(b0 + 2) = p2 * p2 + q2 * q2 - c2 * p2 * q2
+    energies(b0 + 3) = p3 * p3 + q3 * q3 - c3 * p3 * q3
+    energies(b0 + 4) = p4 * p4 + q4 * q4 - c4 * p4 * q4
+  }
+
+  /** Positional frame-hash set for MinHash: hash(frameIndexBucket, bits),
+    * sorted and distinct (the verify stage's merge-walk intersection,
+    * SortedIntersectCountExpr, needs both). Coarse position buckets keep
+    * alignment sensitivity low. */
   def fingerprintHashes(samples: Array[Double], srHz: Int): Array[Long] = {
     val frames = fingerprintFrames(samples, srHz)
-    val set = new java.util.HashSet[java.lang.Long](frames.length * 2)
+    val hs = new Array[Long](frames.length)
     var i = 0
     while (i < frames.length) {
       // 4-frame positional bucket: tolerates small offsets, keeps order info
-      set.add(Murmur3x64.mix64(((i / 4).toLong << 32) ^ (frames(i) & 0xffffffffL)))
+      hs(i) = Murmur3x64.mix64(((i / 4).toLong << 32) ^ (frames(i) & 0xffffffffL))
       i += 1
     }
-    val out = new Array[Long](set.size)
-    val it = set.iterator()
-    var j = 0
-    while (it.hasNext) { out(j) = it.next(); j += 1 }
-    // sorted: enables the merge-walk intersection in the verify stage
-    // (SortedIntersectCountExpr) — sorted once per clip, reused per pair
-    java.util.Arrays.sort(out)
-    out
+    MinHasher.sortedDistinct(hs)
   }
 }

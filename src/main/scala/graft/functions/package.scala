@@ -111,8 +111,11 @@ package object functions {
     if (text == null) Array.emptyLongArray
     else new MinHasher(numPerms).signature(Text.shingleHashes(text, k)))
 
+  // null-tolerant: a clip with no audio evidence (Dedup.signatures passes
+  // null for an empty fingerprint set) gets a null signature, and a null
+  // signature yields no bands
   val minhash_of_hashes = udf((hashes: Seq[Long], numPerms: Int) =>
-    new MinHasher(numPerms).signature(hashes.toArray))
+    if (hashes == null) null else new MinHasher(numPerms).signature(hashes.toArray))
 
   // null-tolerant: a null signature (null transcript upstream) yields no
   // bands rather than an NPE in the candidate stage
@@ -174,8 +177,11 @@ package object functions {
   val quality_struct = udf((text: String) => Text.quality(if (text == null) "" else text))
 
   // ---- audio -----------------------------------------------------------------
-  val audio_fp_hashes = udf((bytes: Array[Byte], codec: String, srHz: Int) =>
-    if (bytes == null) Array.emptyLongArray
+  /** Sorted distinct frame-hash set of a clip. Null bytes or a null sr_hz
+    * mean no audio evidence (an empty set); a non-positive sr_hz fails with
+    * an IllegalArgumentException naming the value. */
+  val audio_fp_hashes = udf((bytes: Array[Byte], codec: String, srHz: java.lang.Integer) =>
+    if (bytes == null || srHz == null) Array.emptyLongArray
     else Pcm.fingerprintHashes(Pcm.decode(bytes, codec), srHz))
 
   val audio_n_samples = udf((bytes: Array[Byte], codec: String) =>

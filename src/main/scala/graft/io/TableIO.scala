@@ -102,7 +102,9 @@ object TableIO {
     * previous build is recomputed instead of served with a stale layout
     * (a round-2 signatures snapshot without the carried sh/afp columns
     * would otherwise break verify() on resume). */
-  val LayoutVersion = "v5" // v5: signature hash arrays sorted (merge-walk
+  val LayoutVersion = "v6" // v6: empty audio fingerprints are no audio
+                           // evidence (null audio_minhash, audio Jaccard 0);
+                           // v5: signature hash arrays sorted (merge-walk
                            // intersection); v4: candidates keyed by 64-bit sids
 
   /** Stable config hash: pins results to the exact shingle/signature

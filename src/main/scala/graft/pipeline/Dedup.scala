@@ -98,7 +98,11 @@ object Dedup {
       afpCol.as("afp"),
       winnow_hashes(t, lit(cfg.winnowK), lit(cfg.winnowWindow)).as("winnow"),
       length(t).as("t_len"))
-      .withColumn("audio_minhash", minhash_of_hashes(col("afp"), lit(cfg.numPerms)))
+      // an empty fingerprint set is no audio evidence: a null signature
+      // puts the clip in no audio bucket (all empty sets would otherwise
+      // share the all-Long.MaxValue signature and every audio band)
+      .withColumn("audio_minhash",
+        minhash_of_hashes(when(size(col("afp")) > 0, col("afp")), lit(cfg.numPerms)))
   }
 
   /** Materialization barrier for multi-consumer intermediates. With a
@@ -603,10 +607,9 @@ object Dedup {
     val jac = try_divide(inter, size(col("sh_a")) + size(col("sh_b")) - inter)
     val cont = try_divide(inter, least(size(col("sh_a")), size(col("sh_b"))).cast("double"))
     val audioJac = array_jaccard(col("afp_a"), col("afp_b"))
-    // criteria follow the enabled evidence: a text-only config must not
-    // apply the audio criterion (empty fingerprint sets would score
-    // audio_jaccard = 1.0 and pass everything), and the Jaccard-only
-    // sub-pipeline (verifyContainment = false) is SQL-replayable exactly
+    // criteria follow the enabled evidence: a text-only config never
+    // applies the audio criterion, and the Jaccard-only sub-pipeline
+    // (verifyContainment = false) is SQL-replayable exactly
     val audioCrit =
       if (cfg.sources("audio")) col("audio_jaccard") >= cfg.audioTau else lit(false)
     val contCrit =
@@ -724,10 +727,12 @@ object Dedup {
   }
 
   /** Exact Jaccard over two pre-computed SORTED hash arrays (audio frame
-    * sets) — codegen merge walk, no per-row hash set. */
+    * sets) — codegen merge walk, no per-row hash set. Two empty sets score
+    * 0: a clip without fingerprints (no or too-short audio, or a text-only
+    * run) is never audio evidence. */
   private def array_jaccard(a: Column, b: Column): Column = {
     val inter = sorted_intersect_count(a, b)
     val uni = size(a) + size(b) - inter
-    when(uni === 0, lit(1.0)).otherwise(inter.cast("double") / uni.cast("double"))
+    when(uni === 0, lit(0.0)).otherwise(inter.cast("double") / uni.cast("double"))
   }
 }

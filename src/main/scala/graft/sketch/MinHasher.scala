@@ -62,6 +62,21 @@ final class MinHasher(val numPerms: Int, val seed: Long = Murmur3x64.DefaultSeed
 }
 
 object MinHasher {
+  /** The set form every MinHash input column uses: `hs` sorted ascending
+    * with duplicates removed, in place (a shorter copy when any were
+    * dropped). Sorted distinct arrays let the verify stage intersect two
+    * sets by a merge walk (SortedIntersectCountExpr). */
+  def sortedDistinct(hs: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(hs)
+    var n = 0
+    var i = 0
+    while (i < hs.length) {
+      if (n == 0 || hs(i) != hs(n - 1)) { hs(n) = hs(i); n += 1 }
+      i += 1
+    }
+    if (n == hs.length) hs else java.util.Arrays.copyOf(hs, n)
+  }
+
   /** Band hashes: bands x rowsPerBand must tile the signature. Each band's
     * r minima hash to one 64-bit bucket key. Collision in ANY band makes a
     * candidate pair (classic LSH OR-construction). */

@@ -68,9 +68,46 @@ object Murmur3x64 {
   def hash128(data: Array[Byte], seed: Long): (Long, Long) =
     hash128(data, 0, data.length, seed)
 
-  /** First 64 bits of the 128-bit hash (how DataSketches derives its 64-bit key). */
+  /** First 64 bits of the 128-bit hash (how DataSketches derives its 64-bit
+    * key) of `len` bytes at `offset`. Same rounds as hash128, but it returns
+    * one primitive instead of a tuple, so a per-k-gram loop allocates
+    * nothing; SketchSpec pins it to `hash128(...)._1`. */
+  def hash64(data: Array[Byte], offset: Int, len: Int, seed: Long): Long = {
+    var h1 = seed
+    var h2 = seed
+    val nblocks = len / 16
+    var i = 0
+    while (i < nblocks) {
+      val base = offset + i * 16
+      var k1 = getLongLE(data, base)
+      var k2 = getLongLE(data, base + 8)
+      k1 *= C1; k1 = rotl64(k1, 31); k1 *= C2; h1 ^= k1
+      h1 = rotl64(h1, 27); h1 += h2; h1 = h1 * 5 + 0x52dce729L
+      k2 *= C2; k2 = rotl64(k2, 33); k2 *= C1; h2 ^= k2
+      h2 = rotl64(h2, 31); h2 += h1; h2 = h2 * 5 + 0x38495ab5L
+      i += 1
+    }
+    val tail = offset + nblocks * 16
+    val rem = len & 15
+    var k1 = 0L
+    var k2 = 0L
+    if (rem > 8) {
+      var j = rem - 1
+      while (j >= 8) { k2 = (k2 << 8) | (data(tail + j) & 0xffL); j -= 1 }
+      k2 *= C2; k2 = rotl64(k2, 33); k2 *= C1; h2 ^= k2
+    }
+    if (rem > 0) {
+      var j = math.min(rem, 8) - 1
+      while (j >= 0) { k1 = (k1 << 8) | (data(tail + j) & 0xffL); j -= 1 }
+      k1 *= C1; k1 = rotl64(k1, 31); k1 *= C2; h1 ^= k1
+    }
+    h1 ^= len.toLong; h2 ^= len.toLong
+    h1 += h2; h2 += h1
+    fmix64(h1) + fmix64(h2)
+  }
+
   def hash64(data: Array[Byte], seed: Long = DefaultSeed): Long =
-    hash128(data, 0, data.length, seed)._1
+    hash64(data, 0, data.length, seed)
 
   def hash64(s: String): Long =
     hash64(s.getBytes(java.nio.charset.StandardCharsets.UTF_8), DefaultSeed)

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.sketch.Murmur3x64
+import graft.sketch.{MinHasher, Murmur3x64}
 import java.nio.charset.StandardCharsets
 
 /** Text primitives for the dedup + training-data pipeline.
@@ -22,23 +22,17 @@ object Text {
     * hands us UTF8String bytes without materializing a String). */
   def shingleHashesBytes(bytes: Array[Byte], k: Int): Array[Long] = {
     if (bytes.length <= k) return Array(Murmur3x64.hash64(bytes, Murmur3x64.DefaultSeed))
-    val n = bytes.length - k + 1
-    val set = new java.util.HashSet[java.lang.Long](n * 2)
+    val hs = new Array[Long](bytes.length - k + 1)
     var i = 0
-    while (i < n) {
-      set.add(Murmur3x64.hash128(bytes, i, k, Murmur3x64.DefaultSeed)._1)
+    while (i < hs.length) {
+      hs(i) = Murmur3x64.hash64(bytes, i, k, Murmur3x64.DefaultSeed)
       i += 1
     }
-    val out = new Array[Long](set.size)
-    val it = set.iterator()
-    var j = 0
-    while (it.hasNext) { out(j) = it.next(); j += 1 }
     // sorted output: downstream set-intersection (verify's hot loop) runs
     // as a zero-allocation merge walk (SortedIntersectCountExpr) instead
     // of a per-row hash set; sorting once per DOC amortizes over every
     // candidate PAIR the doc appears in
-    java.util.Arrays.sort(out)
-    out
+    MinHasher.sortedDistinct(hs)
   }
 
   /** Exact Jaccard over distinct char-k-gram shingles (verification + oracle). */
@@ -84,7 +78,7 @@ object Text {
     val grams = new Array[Long](n)
     var i = 0
     while (i < n) {
-      grams(i) = Murmur3x64.hash128(bytes, i, k, Murmur3x64.DefaultSeed)._1
+      grams(i) = Murmur3x64.hash64(bytes, i, k, Murmur3x64.DefaultSeed)
       i += 1
     }
     if (n <= window) {

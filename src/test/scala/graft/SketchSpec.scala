@@ -139,6 +139,20 @@ class SketchSpec extends AnyFunSuite {
     }
   }
 
+  test("murmur3 64-bit hash at an offset equals the first half of hash128") {
+    val rnd = new scala.util.Random(13)
+    val data = Array.fill[Byte](96)(rnd.nextInt(256).toByte)
+    for (off <- 0 to 20; len <- 0 to (data.length - off) by 3; seed <- Seq(9001L, -1L, 0L)) {
+      assert(Murmur3x64.hash64(data, off, len, seed) == Murmur3x64.hash128(data, off, len, seed)._1,
+        s"off=$off len=$len seed=$seed")
+    }
+    (0 until 500).foreach { _ =>
+      val b = Array.fill[Byte](rnd.nextInt(64))(rnd.nextInt(256).toByte)
+      val s = rnd.nextLong()
+      assert(Murmur3x64.hash64(b, 0, b.length, s) == Murmur3x64.hash128(b, s)._1)
+    }
+  }
+
   test("freq sketch: no-FP view is a subset of no-FN view with true positives only (hh.rs:153-165)") {
     val sk = new FreqSketch(4) // tiny: maxMapSize 12, forces purging
     val truth = scala.collection.mutable.HashMap.empty[String, Long]
